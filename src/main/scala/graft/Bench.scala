@@ -64,7 +64,7 @@ object Bench {
     def clearMemos(): Unit = {
       ml.Ratings.clearCache(); ml.AlsEngine.clearCache()
       ml.Baseline.clearCache(); llm.ShingleStore.clearCache()
-      ApproxGate.clearCache(); Tables.clearCountCache()
+      ApproxGate.clearCache(); Tables.clearCache()
       operators.LlmQueries.clearCountCache()
       operators.MfQueries.clearSweepCache()
       operators.MfQueries.clearCoCache()
@@ -253,9 +253,19 @@ object Bench {
       else Seq(
         "warm:antidote_sweep" ->
           (() => { operators.MfQueries.warmSweep(spark, sfDir); () })))
+    // A failed line keeps its -1 and its cause: "<class>: <first message
+    // line>", reported on stderr and in the full map's error_causes.
+    val causes = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(name: String, e: Throwable): Unit = {
+      val msg = Option(e.getMessage).flatMap(_.linesIterator.toSeq.headOption)
+      val cause = e.getClass.getName + msg.fold("")(": " + _)
+      causes(name) = cause
+      System.err.println(s"[bench] $name failed: $cause")
+    }
     val warmResults = warmups.map { case (name, f) =>
       val t0 = System.nanoTime()
-      val ok = try { f(); true } catch { case _: Throwable => false }
+      val ok = try { f(); true }
+      catch { case e: Throwable => failed(name, e); false }
       (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     // Storage hygiene across a 267-query single-JVM run: queries pin
@@ -292,7 +302,7 @@ object Bench {
         if (cold) clearMemos()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+        catch { case e: Throwable => failed(name, e); false }
         val dt1 = (System.nanoTime() - t0) / 1e9
         // Small queries report best-of-2 (VERDICT r8 task 6): the
         // single-JVM co-tenant noise floor swings small queries >2×
@@ -390,7 +400,15 @@ object Bench {
     // cross-regime diffs report spurious speedups/regressions.
     val regime = s"""{"best2_sec":${r3(best2Sec)},"cold":$cold,""" +
       s""""cache_tables":$cacheTables,"repeat":$repeat}"""
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","regime":$regime,"errors":[${errors.mkString(",")}]}"""
+    def jsonStr(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val errorCauses = causes.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .mkString("{", ",", "}")
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","regime":$regime,"errors":[${errors.mkString(",")}],"error_causes":$errorCauses}"""
     try {
       // Subset runs (SPARK_GRAFT_ONLY) go to a separate file so they can
       // never clobber the last full-registry map — round 6's full map was

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Table-loading conventions for the graft engine.
@@ -17,11 +19,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The fixture table as a DataFrame. The parquet relation (inferred
+    * schema and file listing) is resolved once per (session, dir, table)
+    * and memoized: resolving it runs a schema-inference Spark job, which
+    * every query used to pay again per table it reads. Each call still
+    * returns a fresh DataFrame over that relation with its own attribute
+    * ids, exactly as a separate `spark.read.parquet` would, so two loads
+    * of one table self-join unambiguously and CacheManager substitution
+    * works as before. Safe because fixture data under a dir is immutable
+    * for a session's lifetime (the [[countCached]] contract); session
+    * confs that shape schema inference (`nanosAsLong`) must be set before
+    * the first load. [[clearCache]] resets. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val rel = relationCache.getOrElseUpdate((spark, sfDir, name),
+      spark.read.parquet(s"$sfDir/$name.parquet").queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get)
+    val df = spark.baseRelationToDataFrame(rel)
     if (name == "events" && df.schema.fieldNames.contains("ts")) tsAsNtz(df)
     else df
   }
+
+  private val relationCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), BaseRelation]
 
   private val countCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), Long]
@@ -32,12 +51,13 @@ object Tables {
     * at 100 TB list-scale that recurring count is a real job. Safe
     * because fixture data under a dir is immutable for a session's
     * lifetime (same contract as the Ratings/ApproxGate memos);
-    * [[clearCountCache]] resets for tests / in-place rewrites. */
+    * [[clearCache]] resets for tests / in-place rewrites. */
   def countCached(spark: SparkSession, sfDir: String, name: String): Long =
     countCache.getOrElseUpdate((spark, sfDir, name),
       load(spark, sfDir, name).count())
 
-  def clearCountCache(): Unit = countCache.clear()
+  /** Drops both memos: resolved relations and row counts. */
+  def clearCache(): Unit = { relationCache.clear(); countCache.clear() }
 
   /** Normalize `events.ts` to TIMESTAMP_NTZ regardless of how the fixture
     * encodes it. Fixture generations have carried three encodings: parquet

@@ -387,15 +387,14 @@ object AlsEngine {
         col("na"))
       .as[(Long, Seq[Double], Seq[Double], Long)]
       .map { case (user, bTri, gv, na) =>
-        val m = breeze.linalg.DenseMatrix.zeros[Double](k, k)
+        val m = new Array[Double](k * k) // column-major
         var idx = 0
         for (i <- 0 until k; j <- i until k) {
-          m(i, j) += bTri(idx); if (i != j) m(j, i) += bTri(idx)
+          m(i + j * k) += bTri(idx); if (i != j) m(j + i * k) += bTri(idx)
           idx += 1
         }
-        for (i <- 0 until k) m(i, i) += regParam * na
-        val u = m \ breeze.linalg.DenseVector(gv.toArray)
-        (user, u.toArray.toSeq)
+        for (i <- 0 until k) m(i + i * k) += regParam * na
+        (user, LinAlg.solve(m, gv.toArray).toSeq)
       }
       .toDF("user_id", "features")
   }

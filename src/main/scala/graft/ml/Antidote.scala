@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.ml.recommendation.ALSModel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +13,8 @@ import org.apache.spark.sql.types._
   * Division of labor mirrors the paper and is the 100 TB-safe split:
   *  - Spark (distributed): ratings assembly, ALS re-training, factor
   *    moment aggregates (ū, S — k and k×k reductions over n users).
-  *  - Driver (Breeze): everything sized by the antidote budget —
+  *  - Driver ([[LinAlg]], column-major arrays): everything sized by the
+  *    antidote budget —
   *    X is k̃×m with k̃ = ⌈α·n⌉ (tens to hundreds of rows), and the
   *    gradient needs V (m×k) which is item-dimension-sized, not
   *    data-sized. For very large m, the V·(…) products block over item
@@ -133,14 +133,15 @@ object Antidote {
     * instance (models are themselves memoized) dedupes the recomputation
     * without pinning models the trainers have dropped. */
   private val momentsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[ALSModel,
-      (DenseVector[Double], DenseMatrix[Double])]())
+    new java.util.WeakHashMap[ALSModel, Moments]())
 
-  /** Mean user factor ū and mean outer-product second moment S = E[u uᵀ],
-    * computed distributedly (k and k² cells — constant-size reductions),
-    * memoized per model instance. */
-  def factorMoments(model: ALSModel)
-      : (DenseVector[Double], DenseMatrix[Double]) = {
+  /** User count n, mean user factor ū (k) and mean outer-product second
+    * moment S = E[u uᵀ] (k×k, column-major). */
+  final case class Moments(n: Double, uBar: Array[Double], s: Array[Double])
+
+  /** [[Moments]] computed distributedly (k and k² cells — constant-size
+    * reductions), memoized per model instance. */
+  def factorMoments(model: ALSModel): Moments = {
     val hit = momentsCache.get(model)
     if (hit != null) hit
     else {
@@ -150,8 +151,7 @@ object Antidote {
     }
   }
 
-  private def factorMomentsUncached(model: ALSModel)
-      : (DenseVector[Double], DenseMatrix[Double]) = {
+  private def factorMomentsUncached(model: ALSModel): Moments = {
     val k = model.rank
     val uf = model.userFactors // (id INT, features ARRAY<FLOAT>)
     val sums = uf.select(
@@ -163,15 +163,15 @@ object Antidote {
             element_at(col("features"), j + 1).cast(DoubleType)).as(s"s${i}_$j"))): _*)
       .head()
     val n = sums.getDouble(0)
-    val uBar = DenseVector.tabulate(k)(i => sums.getDouble(1 + i) / n)
-    val s = DenseMatrix.zeros[Double](k, k)
+    val uBar = Array.tabulate(k)(i => sums.getDouble(1 + i) / n)
+    val s = new Array[Double](k * k)
     var idx = 1 + k
     for (i <- 0 until k; j <- i until k) {
       val v = sums.getDouble(idx) / n
-      s(i, j) = v; s(j, i) = v
+      s(i + j * k) = v; s(j + i * k) = v
       idx += 1
     }
-    (uBar, s)
+    Moments(n, uBar, s)
   }
 
   /** Polarization of the model's predictions over ALL (user,item) pairs in
@@ -181,13 +181,13 @@ object Antidote {
     * codegen'd column over itemFactors (no m×k collect — at large m the
     * old driver-side loop was the bottleneck of the Alg-1 trace). */
   def polarization(model: ALSModel): Double = {
-    val (uBar, s) = factorMoments(model)
+    val Moments(_, uBar, s) = factorMoments(model)
     val k = model.rank
     def e(i: Int): Column =
       element_at(col("features"), i + 1).cast(DoubleType)
     // v'Sv over the symmetric S: diagonal terms once, off-diagonal twice.
     val quad = (for (i <- 0 until k; j <- i until k) yield
-      e(i) * e(j) * lit(if (i == j) s(i, j) else 2.0 * s(i, j)))
+      e(i) * e(j) * lit(if (i == j) s(i + j * k) else 2.0 * s(i + j * k)))
       .reduce(_ + _)
     val mean = (0 until k).map(i => e(i) * lit(uBar(i))).reduce(_ + _)
     model.itemFactors
@@ -351,23 +351,29 @@ object Antidote {
     val model = pretrained.getOrElse(AlsEngine.train(aug.get, cfg))
     val k = cfg.rank
 
-    val (uBar, _) = factorMoments(model)
-    val nTot = model.userFactors.count().toDouble
-    val m = model.itemFactors.count().toDouble
+    // n (user count) rides on the memoized moment pass
+    val Moments(nTot, uBar, _) = factorMoments(model)
 
     // B = VᵀV — k×k reduction over item factors via the typed Gram
-    // aggregator (partial-aggregates map-side; merges associatively).
+    // aggregator (partial-aggregates map-side; merges associatively),
+    // with the item count m from the same pass.
     val f = col("features")
     val gram = udaf(new graft.functions.GramAggregator(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
-    val tri = model.itemFactors.select(gram(f).as("g")).head().getSeq[Double](0)
-    val b = DenseMatrix.zeros[Double](k, k)
+    val gRow = model.itemFactors
+      .select(gram(f).as("g"), count(lit(1)).as("m")).head()
+    val tri = gRow.getSeq[Double](0)
+    val m = gRow.getLong(1).toDouble
+    val b = new Array[Double](k * k)
     var idx = 0
     for (i <- 0 until k; j <- i until k) {
-      b(i, j) = tri(idx); b(j, i) = tri(idx)
+      b(i + j * k) = tri(idx); b(j + i * k) = tri(idx)
       idx += 1
     }
-    val a = b + (DenseMatrix.eye[Double](k) * (cfg.regParam * m))
+    // A = B + λ·m·I, cell by cell as B + (I·λm) (adding 0.0 off the
+    // diagonal keeps even a -0.0 cell bit-identical to that form)
+    val a = Array.tabulate(k * k)(p =>
+      b(p) + (if (p % k == p / k) cfg.regParam * m else 0.0))
 
     // t_a = Vᵀ x_a per antidote user: broadcast-join X with item factors,
     // aggregate k weighted sums — result is k̃×k, tiny on the driver.
@@ -385,10 +391,12 @@ object Antidote {
 
     val c = 2.0 / (m * nTot)
     val wRows = tRows.map { r =>
-      val t = DenseVector.tabulate(k)(i => r.getDouble(1 + i))
-      val ua = a \ t                       // ridge closed form
-      val wa = (a \ (b * (ua - uBar))) * c // gradient coefficients
-      (r.getLong(0), wa.toArray.toSeq)
+      val t = Array.tabulate(k)(i => r.getDouble(1 + i))
+      val ua = LinAlg.solve(a, t) // ridge closed form
+      // gradient coefficients w_a = c·A⁻¹ B (u_a − ū)
+      val d = Array.tabulate(k)(i => ua(i) - uBar(i))
+      val wa = LinAlg.solve(a, LinAlg.mulVec(b, k, d)).map(_ * c)
+      (r.getLong(0), wa.toSeq)
     }.toSeq
     val wdf = wRows.toDF("user_id", "w")
 
@@ -445,9 +453,9 @@ object Antidote {
     val uaRows = model.userFactors.filter(col("id") > mx).collect()
       .map(r => (r.getInt(0).toLong, r.getSeq[Float](1).map(_.toDouble).toArray))
     val kTilde = uaRows.length
-    val sa = DenseMatrix.zeros[Double](k, k)
+    val sa = new Array[Double](k * k) // column-major
     uaRows.foreach { case (_, u) =>
-      for (i <- 0 until k; j <- 0 until k) sa(i, j) += u(i) * u(j)
+      for (i <- 0 until k; j <- 0 until k) sa(i + j * k) += u(i) * u(j)
     }
 
     // Per-user metric weight d_i = ∂U/∂ℓ_i (constant-size driver scalars).
@@ -504,7 +512,6 @@ object Antidote {
       .agg(aggCols.head, aggCols.tail: _*)
 
     // Per-item ridge solve w_j = M_j⁻¹ g_j — distributed typed map.
-    val saArr = sa.toArray // column-major k×k
     val lam = cfg.regParam
     val solved = itemAgg.select(col("item_id"),
         array(triNames.map(col): _*).as("btri"),
@@ -512,15 +519,14 @@ object Antidote {
         col("nj"))
       .as[(Long, Seq[Double], Seq[Double], Long)]
       .map { case (item, bTri, gv, nj) =>
-        val m = new DenseMatrix[Double](k, k, saArr.clone())
+        val m = sa.clone()
         var idx = 0
         for (i <- 0 until k; j <- i until k) {
-          m(i, j) += bTri(idx); if (i != j) m(j, i) += bTri(idx)
+          m(i + j * k) += bTri(idx); if (i != j) m(j + i * k) += bTri(idx)
           idx += 1
         }
-        for (i <- 0 until k) m(i, i) += lam * (nj + kTilde)
-        val w = m \ DenseVector(gv.toArray)
-        (item, w.toArray.toSeq)
+        for (i <- 0 until k) m(i + i * k) += lam * (nj + kTilde)
+        (item, LinAlg.solve(m, gv.toArray).toSeq)
       }.toDF("item_id", "w")
 
     // grad_aj = u_aᵀ w_j; projected update stays fully distributed (items

@@ -120,10 +120,13 @@ object LlmQueries {
       // keyed by (session, sfDir): checkpointed blocks belong to the
       // session that built them (PairStore/coPairs idiom)
       simhashCandCache.getOrElseUpdate((s, d), {
+        // the signature memo first, so `before` already holds its blocks
+        // and this memo protects only its own checkpoint
+        val sigs = simhashSigs(s, d)
         val before = s.sparkContext.getPersistentRDDs.keySet.toSet
         val nAug = augDocCount(s, d)
         val (lanes, bits, thr, blocks) = Dedup.simhashParamsFor(nAug)
-        val f = Dedup.simhashNearDupsFromSigs(simhashSigs(s, d), bits,
+        val f = Dedup.simhashNearDupsFromSigs(sigs, bits,
           thr, blocks, blocks - thr / lanes, lanes).localCheckpoint()
         graft.MemoKeep.protect(
           s.sparkContext.getPersistentRDDs.keySet.toSet -- before)

@@ -59,4 +59,19 @@ class ContractSpec extends SparkTestBase {
       .filterNot(n => survey.contains(s"`$n`"))
     assert(missing.isEmpty, s"not in SURVEY §2: ${missing.mkString(",")}")
   }
+
+  test("no engine source references Breeze (its first-use class init " +
+      "costs the driver ~1.7 s; dense algebra goes through ml.LinAlg)") {
+    import scala.jdk.CollectionConverters._
+    val ref = "(?<![\\w.])breeze\\.".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if ref.findFirstIn(line).isDefined => s"$p:${i + 1}"
+        }
+      } finally files.close()
+    assert(hits.isEmpty, s"breeze references: ${hits.mkString(", ")}")
+  }
 }
